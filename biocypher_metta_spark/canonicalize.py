@@ -30,7 +30,8 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
 
     Label propagation: every node starts labeled with itself; each round
     adopts the min label among itself and its neighbors; stop when no
-    label changes (checked with a cheap agg) or max_iter.
+    label changes (checked with a cheap agg). Raises when max_iter rounds
+    end before that: partial labels would split components silently.
     """
     sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
            .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -45,6 +46,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
               .union(sym.select(F.col("b").alias("id")))
               .distinct()
               .withColumn("component", F.col("id")))
+    converged = False
     for _ in range(max_iter):
         neigh = (sym.join(labels, sym["b"] == labels["id"])
                  .select(F.col("a").alias("id"),
@@ -56,23 +58,32 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         # ONE materialization per round: checkpoint first, then read the
         # convergence flag and the next labels off the checkpointed rows
         # (the previous shape computed new_labels twice per round).
-        new_labels = new_labels.localCheckpoint(eager=True)
+        # _ckcut, not plain localCheckpoint: each round joins the previous
+        # round's labels, so inherited size stats would square per round
+        # and planning would stall past ~20 rounds (see ckpt.py)
+        new_labels = _ckcut(new_labels)
         changed = new_labels.filter(
             F.col("newc").isNotNull() & (F.col("newc") != F.col("component"))
         ).limit(1).count()
         labels = new_labels.select(
             "id", F.coalesce("newc", "component").alias("component"))
         if changed == 0:
+            converged = True
             break
+    if not converged:
+        # a label needs one round per hop, plus one to see no change
+        raise RuntimeError(
+            f"connected_components did not reach a fixed point within "
+            f"{max_iter} rounds (a component's diameter must be below "
+            "max_iter); raise max_iter")
     return labels
 
 
 def canonical_id_map(alias_edges: DataFrame, max_iter: int = 10) -> DataFrame:
-    """(id, canonical_id): lexicographic-min member per alias component."""
-    comp = connected_components(alias_edges, max_iter=max_iter)
-    canon = comp.groupBy("component").agg(F.min("id").alias("canonical_id"))
-    return (comp.join(canon, "component")
-            .select("id", "canonical_id"))
+    """(id, canonical_id): lexicographic-min member per alias component,
+    which is the converged component label itself."""
+    return (connected_components(alias_edges, max_iter=max_iter)
+            .select("id", F.col("component").alias("canonical_id")))
 
 
 def alias_edges_from_dims(*dims: DataFrame) -> DataFrame:

@@ -41,14 +41,20 @@ MENTION_SCHEMA = ArrayType(StructType([
 _TOKEN_RE = re.compile(r"[A-Za-z0-9:_.\-]+")
 
 
+def _surface_maps(dictionary: dict[str, str]) -> tuple[dict, dict]:
+    """(exact surface -> entity, casefolded surface -> entity); on a
+    casefold collision the first surface in dictionary order wins."""
+    folded: dict[str, str] = {}
+    for k, v in dictionary.items():
+        folded.setdefault(k.casefold(), v)
+    return dict(dictionary), folded
+
+
 def build_mention_udf(spark: SparkSession, dictionary: dict[str, str],
                       max_ngram: int = 3):
     """dictionary: surface form -> entity id. Returns
     detect(text_col) -> array<struct<mention,entity,score>>."""
-    exact = dict(dictionary)
-    folded: dict[str, str] = {}
-    for k, v in dictionary.items():
-        folded.setdefault(k.casefold(), v)
+    exact, folded = _surface_maps(dictionary)
     bc = spark.sparkContext.broadcast((exact, folded, max_ngram))
 
     @F.pandas_udf(MENTION_SCHEMA)
@@ -108,10 +114,7 @@ def build_mention_join(spark: SparkSession, dictionary: dict[str, str],
     Returns link(lines_df, text_col='value') -> DataFrame
     (doc_id, mention, entity, score >= min_score).
     """
-    exact = dict(dictionary)
-    folded: dict[str, str] = {}
-    for k, v in dictionary.items():
-        folded.setdefault(k.casefold(), v)
+    exact, folded = _surface_maps(dictionary)
     edim = spark.createDataFrame(list(exact.items()),
                                  "surface string, entity_e string")
     fdim = spark.createDataFrame(list(folded.items()),
@@ -173,15 +176,10 @@ def link_documents(docs_lines: DataFrame, detect,
     return out.filter(F.col("score") >= min_score)
 
 
-def entity_mention_counts(linked: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """groupBy(entity) with salted partial aggregation: hub entities
-    (TP53-class) are pre-aggregated within salt buckets before the global
-    combine (north-rule skew handling)."""
-    salted = linked.withColumn(
-        "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)))
-    partial = (salted.groupBy("entity", "_salt")
-               .agg(F.count("*").alias("c"),
-                    F.sum("score").alias("s")))
-    return (partial.groupBy("entity")
-            .agg(F.sum("c").alias("n_mentions"),
-                 F.sum("s").alias("score_sum")))
+def entity_mention_counts(linked: DataFrame) -> DataFrame:
+    """Mentions and score total per entity. Both aggregates are algebraic,
+    so Spark's map-side partial aggregation already folds a hub entity
+    (TP53-class) to one row per task before the single shuffle."""
+    return (linked.groupBy("entity")
+            .agg(F.count("*").alias("n_mentions"),
+                 F.sum("score").alias("score_sum")))

@@ -12,12 +12,23 @@ contributes a DataFrame fragment to ONE logical plan:
                                                          ├─ triple table (partitioned, manifest)
                                                          └─ .metta shards + type_defs
 
+The config-entry -> adapter mapping is one declarative table,
+PIPELINE_REGISTRY: each `Entry` names an adapter function and lists its
+inputs in call order (a span kind, a keyed span kind, a dim, an optional
+dim, the parsed GTF, the parsed SwissProt records, the schema registry).
+Only the entries with real wiring logic are functions (dbSUPER's shared
+lifted scan, HOCOMOCO's model->TF join, GAF's optional RNAcentral map).
+Every entry returns (typed, atoms); `build` tells edges from nodes by the
+typed frame's columns.
+
 Shared scans are cached once; Catalyst dedups the rest. Outputs are
 written with dynamic partition overwrite + lineage manifests (resume).
 """
 
 from __future__ import annotations
 
+import functools
+import importlib
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -72,257 +83,216 @@ class PipelineContext:
         return self._cache[key]
 
 
-# entry name -> callable(ctx, **args) -> (typed_df, atoms_df, is_edge)
+# ---------------------------------------------------------------------------
+# entry table
+# ---------------------------------------------------------------------------
+# An adapter input is a tagged tuple that _resolve turns into a frame of the
+# context. The table holds only data, so the span kinds and dims an entry
+# reads can be listed without binding it.
 
 
-def _gencode_gene(ctx: PipelineContext, **args):
-    from biocypher_metta_spark.adapters import gencode
-
-    typed, atoms = gencode.gene_nodes(
-        ctx.gtf(), alias_df=ctx.dims.get("gene_alias"), **args)
-    return typed, atoms, False
+def span(kind: str) -> tuple:
+    """The lines of one span kind."""
+    return ("span", kind)
 
 
-def _gencode_transcript(ctx: PipelineContext, **args):
-    from biocypher_metta_spark.adapters import gencode
-
-    typed, atoms = gencode.transcript_nodes(ctx.gtf(), **args)
-    return typed, atoms, False
+def keyed_span(prefix: str, key_col: str) -> tuple:
+    """The lines of every '<prefix>:<key>' span kind, the key in `key_col`."""
+    return ("keyed_span", prefix, key_col)
 
 
-def _gencode_exon(ctx: PipelineContext, **args):
-    from biocypher_metta_spark.adapters import gencode
-    from biocypher_metta_spark.sources.gtf import EXON_KEYS
-
-    typed, atoms = gencode.exon_nodes(
-        ctx.gtf(keys=GENE_KEYS + ["exon_number", "exon_id"]), **args)
-    return typed, atoms, False
+def dim(name: str) -> tuple:
+    return ("dim", name)
 
 
-def _transcribed(direction):
-    def run(ctx: PipelineContext, **args):
-        from biocypher_metta_spark.adapters import gencode
-
-        typed, atoms = gencode.transcribed_edges(
-            ctx.gtf(), ctx.registry, direction, **args)
-        return typed, atoms, True
-
-    return run
+def opt_dim(name: str) -> tuple:
+    """A dim the adapter can do without (None when the context lacks it)."""
+    return ("opt_dim", name)
 
 
-def _dbsnp(ctx: PipelineContext, **args):
-    from biocypher_metta_spark.adapters import variants
-
-    typed, atoms = variants.dbsnp_nodes(ctx.lines("vcf"), **args)
-    return typed, atoms, False
+def gtf(keys: tuple = tuple(GENE_KEYS)) -> tuple:
+    """The cached parsed GTF with these attribute keys."""
+    return ("gtf", keys)
 
 
-def _node_adapter(fn_path, kind, dim_args=(), is_edge=False, needs_registry=False,
-                  keyed=None):
-    """Generic registry entry: adapters.<module>.<fn>(lines, *dims[,registry])."""
-
-    def run(ctx: PipelineContext, **args):
-        import importlib
-
-        mod_name, fn_name = fn_path.rsplit(".", 1)
-        mod = importlib.import_module(f"biocypher_metta_spark.adapters.{mod_name}")
-        fn = getattr(mod, fn_name)
-        lines = ctx.lines_keyed(kind, keyed) if keyed else ctx.lines(kind)
-        dims = [ctx.dims[d] for d in dim_args]
-        if needs_registry:
-            typed, atoms = fn(lines, *dims, ctx.registry, **args)
-        else:
-            typed, atoms = fn(lines, *dims, **args)
-        return typed, atoms, is_edge
-
-    return run
+SWISS = ("swiss",)  # the cached parsed SwissProt records
+SCHEMA_REGISTRY = ("registry",)  # passed as `registry=`, whatever its place
 
 
-def _swiss(fn_name, is_edge, needs_registry=False):
-    def run(ctx: PipelineContext, **args):
-        import biocypher_metta_spark.adapters.annotations as ann
+def _resolve(ctx: PipelineContext, inp: tuple):
+    source, *rest = inp
+    if source == "span":
+        return ctx.lines(*rest)
+    if source == "keyed_span":
+        return ctx.lines_keyed(*rest)
+    if source == "dim":
+        return ctx.dims[rest[0]]
+    if source == "opt_dim":
+        return ctx.dims.get(rest[0])
+    if source == "gtf":
+        return ctx.gtf(keys=list(rest[0]))
+    if source == "swiss":
         from biocypher_metta_spark.sources.swiss import parse_swiss_spans
 
-        recs = ctx.cached("swiss_records",
+        return ctx.cached("swiss_records",
                           lambda: parse_swiss_spans(ctx.lines("swiss_record")))
-        fn = getattr(ann, fn_name)
-        if needs_registry:
-            typed, atoms = fn(recs, ctx.registry, **args)
-        else:
-            typed, atoms = fn(recs, **args)
-        return typed, atoms, is_edge
-
-    return run
+    raise ValueError(f"unknown adapter input {inp!r}")
 
 
-def _two_file(fn_path, kinds, dim_args=(), is_edge=False, needs_registry=False):
-    def run(ctx: PipelineContext, **args):
-        import importlib
+@dataclass(frozen=True)
+class Entry:
+    """One config entry: `adapters.<module>.<function>` called with its
+    inputs resolved in order, then `fixed` and the entry's config args as
+    keywords. Returns the adapter's (typed, atoms)."""
+    fn: str
+    inputs: tuple = ()
+    fixed: dict = field(default_factory=dict)
 
-        mod_name, fn_name = fn_path.rsplit(".", 1)
+    def __call__(self, ctx: PipelineContext, **args):
+        mod_name, fn_name = self.fn.rsplit(".", 1)
         mod = importlib.import_module(f"biocypher_metta_spark.adapters.{mod_name}")
-        fn = getattr(mod, fn_name)
-        lines = [ctx.lines(k) for k in kinds]
-        dims = [ctx.dims[d] for d in dim_args]
-        if needs_registry:
-            typed, atoms = fn(*lines, *dims, ctx.registry, **args)
-        else:
-            typed, atoms = fn(*lines, *dims, **args)
-        return typed, atoms, is_edge
-
-    return run
+        frames = []
+        for inp in self.inputs:
+            if inp == SCHEMA_REGISTRY:
+                args["registry"] = ctx.registry
+            else:
+                frames.append(_resolve(ctx, inp))
+        return getattr(mod, fn_name)(*frames, **self.fixed, **args)
 
 
-def _dbsuper(fn_name, is_edge):
-    def run(ctx: PipelineContext, **args):
-        from biocypher_metta_spark.adapters import regulatory as reg
+# the few entries whose wiring is more than resolving inputs
 
-        lift = ctx.dims["liftover"]  # a liftover(chr,pos) callable
-        window = (args.get("chr"), args.get("start"), args.get("end"))
-        # the lifted base scan is shared between the node and edge outputs
-        # (one Arrow liftover pass instead of two)
-        base = ctx.cached(("dbsuper_base", window), lambda: reg._dbsuper_base(
-            ctx.lines("dbsuper"), lift, *window))
-        if fn_name == "dbsuper_nodes":
-            typed, atoms = reg.dbsuper_nodes(None, lift, base=base, **args)
-        else:
-            typed, atoms = reg.dbsuper_edges(
-                None, lift, ctx.dims["hgnc_to_ensembl"],
-                ctx.dims["dbsuper_tissues"], ctx.registry, base=base, **args)
-        return typed, atoms, is_edge
 
-    return run
+def _lifted_dbsuper(ctx: PipelineContext, args: dict):
+    """(liftover, lifted dbSUPER rows): the lifted scan is shared between
+    the node and edge entries (one Arrow liftover pass instead of two)."""
+    from biocypher_metta_spark.adapters import regulatory as reg
+
+    lift = ctx.dims["liftover"]  # a liftover(chr,pos) callable
+    window = (args.get("chr"), args.get("start"), args.get("end"))
+    return lift, ctx.cached(("dbsuper_base", window), lambda: reg._dbsuper_base(
+        ctx.lines("dbsuper"), lift, *window))
+
+
+def _dbsuper_nodes(ctx: PipelineContext, **args):
+    from biocypher_metta_spark.adapters import regulatory as reg
+
+    lift, base = _lifted_dbsuper(ctx, args)
+    return reg.dbsuper_nodes(None, lift, base=base, **args)
+
+
+def _dbsuper_edges(ctx: PipelineContext, **args):
+    from biocypher_metta_spark.adapters import regulatory as reg
+
+    lift, base = _lifted_dbsuper(ctx, args)
+    return reg.dbsuper_edges(None, lift, ctx.dims["hgnc_to_ensembl"],
+                             ctx.dims["dbsuper_tissues"], ctx.registry,
+                             base=base, **args)
 
 
 def _hocomoco(ctx: PipelineContext, **args):
+    """PWM rows keyed by model, joined to their TF via the annotation file."""
     import biocypher_metta_spark.adapters.annotations as ann
 
     lines = ctx.lines_keyed("pwm", "model").withColumn(
         "row_order", F.col("offset"))
     model_tf = ann.parse_model_tf(ctx.lines("hocomoco_annotation"))
-    typed, atoms = ann.hocomoco_motif_nodes(
+    return ann.hocomoco_motif_nodes(
         lines, model_tf, ctx.dims["hgnc_to_ensembl"], **args)
-    return typed, atoms, False
 
 
 def _gaf(ctx: PipelineContext, gaf_type="human", **args):
+    """GO annotations; the RNA flavour maps RNAcentral ids to GENCODE."""
     import biocypher_metta_spark.adapters.annotations as ann
 
     rmap = None
     if gaf_type == "rna":
         rmap = ann.parse_rnacentral_gencode_map(ctx.lines("rnacentral_map"))
-    typed, atoms = ann.gaf_edges(ctx.lines("gaf"), ctx.registry,
-                                 gaf_type=gaf_type, rnacentral_map=rmap, **args)
-    return typed, atoms, True
+    return ann.gaf_edges(ctx.lines("gaf"), ctx.registry,
+                         gaf_type=gaf_type, rnacentral_map=rmap, **args)
 
 
-def _topld(ctx: PipelineContext, **args):
-    from biocypher_metta_spark.adapters import forgedb
-
-    typed, atoms = forgedb.topld_edges(ctx.lines("topld"),
-                                       ctx.dims["dbsnp_pos"],
-                                       registry=ctx.registry, **args)
-    return typed, atoms, True
-
-
-def _ontology(fn_name, is_edge):
-    def run(ctx: PipelineContext, **args):
-        from biocypher_metta_spark.adapters import ontology as onto
-
-        triples = ctx.dims["ontology_triples"]
-        fn = getattr(onto, fn_name)
-        if is_edge:
-            typed, atoms = fn(triples, args.pop("label"), ctx.registry, **args)
-        else:
-            typed, atoms = fn(triples, args.pop("label"), **args)
-        return typed, atoms, is_edge
-
-    return run
-
-
+# entry name -> callable(ctx, **args) -> (typed_df, atoms_df); build tells
+# edges (src, tgt) from nodes (id) by the typed frame's columns
 PIPELINE_REGISTRY = {
     # gencode family (shared cached GTF scan)
-    "gencode_gene": _gencode_gene,
-    "gencode_transcript": _gencode_transcript,
-    "gencode_exon": _gencode_exon,
-    "transcribed_to": _transcribed("to"),
-    "transcribed_from": _transcribed("from"),
+    "gencode_gene": Entry("gencode.gene_nodes", (gtf(), opt_dim("gene_alias"))),
+    "gencode_transcript": Entry("gencode.transcript_nodes", (gtf(),)),
+    "gencode_exon": Entry("gencode.exon_nodes",
+                          (gtf((*GENE_KEYS, "exon_number", "exon_id")),)),
+    "transcribed_to": Entry("gencode.transcribed_edges", (gtf(), SCHEMA_REGISTRY),
+                            {"direction": "to"}),
+    "transcribed_from": Entry("gencode.transcribed_edges", (gtf(), SCHEMA_REGISTRY),
+                              {"direction": "from"}),
     # variants
-    "dbsnp": _dbsnp,
-    "dbvar": _node_adapter("variants.dbvar_nodes", "vcf"),
-    "dgv": _node_adapter("variants.dgv_nodes", "dgv"),
-    "favor": _node_adapter("variants.favor_nodes", "favor"),
+    "dbsnp": Entry("variants.dbsnp_nodes", (span("vcf"),)),
+    "dbvar": Entry("variants.dbvar_nodes", (span("vcf"),)),
+    "dgv": Entry("variants.dgv_nodes", (span("dgv"),)),
+    "favor": Entry("variants.favor_nodes", (span("favor"),)),
     # reactome
-    "pathway": _two_file("pathways.pathway_nodes",
-                         ["reactome_pathways", "reactome_pmids"]),
-    "genes_pathways": _node_adapter("pathways.genes_pathways_edges",
-                                    "reactome_gene_map", is_edge=True,
-                                    needs_registry=True),
-    "parent_pathway_of": _node_adapter("pathways.pathway_rel_edges",
-                                       "reactome_relations", is_edge=True,
-                                       needs_registry=True),
-    "child_pathway_of": _node_adapter("pathways.pathway_rel_edges",
-                                      "reactome_relations", is_edge=True,
-                                      needs_registry=True),
+    "pathway": Entry("pathways.pathway_nodes",
+                     (span("reactome_pathways"), span("reactome_pmids"))),
+    "genes_pathways": Entry("pathways.genes_pathways_edges",
+                            (span("reactome_gene_map"), SCHEMA_REGISTRY)),
+    "parent_pathway_of": Entry("pathways.pathway_rel_edges",
+                               (span("reactome_relations"), SCHEMA_REGISTRY)),
+    "child_pathway_of": Entry("pathways.pathway_rel_edges",
+                              (span("reactome_relations"), SCHEMA_REGISTRY)),
     # interactions
-    "string": _node_adapter("interactions.string_ppi_edges", "string",
-                            ("ensembl_to_uniprot",), is_edge=True,
-                            needs_registry=True),
-    "tflink": _node_adapter("interactions.tflink_edges", "tflink",
-                            ("entrez_to_ensembl",), is_edge=True,
-                            needs_registry=True),
-    "coexpression": _node_adapter("interactions.coxpresdb_edges", "coxpresdb",
-                                  ("entrez_to_ensembl",), is_edge=True,
-                                  needs_registry=True, keyed="file_entrez"),
+    "string": Entry("interactions.string_ppi_edges",
+                    (span("string"), dim("ensembl_to_uniprot"), SCHEMA_REGISTRY)),
+    "tflink": Entry("interactions.tflink_edges",
+                    (span("tflink"), dim("entrez_to_ensembl"), SCHEMA_REGISTRY)),
+    "coexpression": Entry("interactions.coxpresdb_edges",
+                          (keyed_span("coxpresdb", "file_entrez"),
+                           dim("entrez_to_ensembl"), SCHEMA_REGISTRY)),
     # regulatory
-    "epd_promoter": _node_adapter("regulatory.epd_promoter_nodes", "epd"),
-    "epd_promoter_gene": _node_adapter("regulatory.epd_promoter_gene_edges",
-                                       "epd", ("hgnc_to_ensembl",),
-                                       is_edge=True, needs_registry=True),
-    "enhancer_atlas": _node_adapter("regulatory.enhancer_atlas_nodes", "ea_bed"),
-    "enhancer_atlas_gene": _node_adapter("regulatory.enhancer_atlas_edges",
-                                         "ea_gene", ("ea_tissues",),
-                                         is_edge=True, needs_registry=True,
-                                         keyed="tissue"),
-    "tadmap": _node_adapter("regulatory.tadmap_nodes", "tadmap"),
-    "dbsuper": _dbsuper("dbsuper_nodes", False),
-    "dbsuper_gene": _dbsuper("dbsuper_edges", True),
-    "peregrine": _two_file("regulatory.peregrine_nodes",
-                           ["peregrine_enhancers", "peregrine_sources"]),
-    "peregrine_gene": _two_file("regulatory.peregrine_edges",
-                                ["peregrine_enhancers", "peregrine_links"],
-                                ("hgnc_ensembl_map", "peregrine_tissues"),
-                                is_edge=True, needs_registry=True),
+    "epd_promoter": Entry("regulatory.epd_promoter_nodes", (span("epd"),)),
+    "epd_promoter_gene": Entry("regulatory.epd_promoter_gene_edges",
+                               (span("epd"), dim("hgnc_to_ensembl"), SCHEMA_REGISTRY)),
+    "enhancer_atlas": Entry("regulatory.enhancer_atlas_nodes", (span("ea_bed"),)),
+    "enhancer_atlas_gene": Entry("regulatory.enhancer_atlas_edges",
+                                 (keyed_span("ea_gene", "tissue"), dim("ea_tissues"),
+                                  SCHEMA_REGISTRY)),
+    "tadmap": Entry("regulatory.tadmap_nodes", (span("tadmap"),)),
+    "dbsuper": _dbsuper_nodes,
+    "dbsuper_gene": _dbsuper_edges,
+    "peregrine": Entry("regulatory.peregrine_nodes",
+                       (span("peregrine_enhancers"), span("peregrine_sources"))),
+    "peregrine_gene": Entry("regulatory.peregrine_edges",
+                            (span("peregrine_enhancers"), span("peregrine_links"),
+                             dim("hgnc_ensembl_map"), dim("peregrine_tissues"),
+                             SCHEMA_REGISTRY)),
     # annotations
-    "rna_central": _node_adapter("annotations.rna_central_nodes", "rna_bed"),
-    "rna_central_go": _node_adapter("annotations.rna_central_go_edges",
-                                    "rna_rfam", is_edge=True,
-                                    needs_registry=True),
+    "rna_central": Entry("annotations.rna_central_nodes", (span("rna_bed"),)),
+    "rna_central_go": Entry("annotations.rna_central_go_edges",
+                            (span("rna_rfam"), SCHEMA_REGISTRY)),
     "hocomoco": _hocomoco,
     "gaf": _gaf,
-    "uniprot_protein": _swiss("uniprot_protein_nodes", False),
-    "uniprot_translates": _swiss("uniprot_translation_edges", True,
-                                 needs_registry=True),
+    "uniprot_protein": Entry("annotations.uniprot_protein_nodes", (SWISS,)),
+    "uniprot_translates": Entry("annotations.uniprot_translation_edges",
+                                (SWISS, SCHEMA_REGISTRY)),
     # forgedb family (dbsnp rsid dimension)
-    "roadmap": _node_adapter("forgedb.roadmap_nodes", "roadmap",
-                             ("roadmap_tissues", "dbsnp_rsid")),
-    "abc": _node_adapter("forgedb.abc_nodes", "abc",
-                         ("abc_tissues", "dbsnp_rsid")),
-    "abc_gene": _node_adapter("forgedb.abc_edges", "abc",
-                              ("hgnc_to_ensembl", "abc_tissues", "dbsnp_rsid"),
-                              is_edge=True),
-    "cadd": _node_adapter("forgedb.cadd_nodes", "cadd", ("dbsnp_rsid",)),
-    "refseq_closest_gene": _node_adapter("forgedb.refseq_closest_gene_edges",
-                                         "closest_gene",
-                                         ("hgnc_to_ensembl", "dbsnp_rsid"),
-                                         is_edge=True),
-    "topld": _topld,
-    "gtex_eqtl": _node_adapter("forgedb.gtex_eqtl_edges", "gtex",
-                               ("gtex_tissues",), is_edge=True,
-                               needs_registry=True, keyed="tissue"),
-    # ontology
-    "ontology_nodes": _ontology("ontology_nodes", False),
-    "ontology_edges": _ontology("ontology_edges", True),
+    "roadmap": Entry("forgedb.roadmap_nodes",
+                     (span("roadmap"), dim("roadmap_tissues"), dim("dbsnp_rsid"))),
+    "abc": Entry("forgedb.abc_nodes",
+                 (span("abc"), dim("abc_tissues"), dim("dbsnp_rsid"))),
+    "abc_gene": Entry("forgedb.abc_edges",
+                      (span("abc"), dim("hgnc_to_ensembl"), dim("abc_tissues"),
+                       dim("dbsnp_rsid"))),
+    "cadd": Entry("forgedb.cadd_nodes", (span("cadd"), dim("dbsnp_rsid"))),
+    "refseq_closest_gene": Entry("forgedb.refseq_closest_gene_edges",
+                                 (span("closest_gene"), dim("hgnc_to_ensembl"),
+                                  dim("dbsnp_rsid"))),
+    "topld": Entry("forgedb.topld_edges",
+                   (span("topld"), dim("dbsnp_pos"), SCHEMA_REGISTRY)),
+    "gtex_eqtl": Entry("forgedb.gtex_eqtl_edges",
+                       (keyed_span("gtex", "tissue"), dim("gtex_tissues"),
+                        SCHEMA_REGISTRY)),
+    # ontology (the config names the label)
+    "ontology_nodes": Entry("ontology.ontology_nodes", (dim("ontology_triples"),)),
+    "ontology_edges": Entry("ontology.ontology_edges",
+                            (dim("ontology_triples"), SCHEMA_REGISTRY)),
 }
 
 
@@ -333,6 +303,13 @@ class PipelineResult:
     atoms: DataFrame
 
 
+def _union(parts: list[DataFrame], allow_missing: bool = False) -> DataFrame | None:
+    if not parts:
+        return None
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing), parts)
+
+
 def build(ctx: PipelineContext, config: list[dict]) -> PipelineResult:
     """config entries: {adapter: <registry name>, args: {...}} — ordered
     like adapters_config.yaml; order only affects nothing (set-semantics
@@ -341,30 +318,18 @@ def build(ctx: PipelineContext, config: list[dict]) -> PipelineResult:
     edge_parts: list[DataFrame] = []
     atom_parts: list[DataFrame] = []
     for entry in config:
-        fn = PIPELINE_REGISTRY[entry["adapter"]]
-        typed, atoms, is_edge = fn(ctx, **entry.get("args", {}))
+        typed, atoms = PIPELINE_REGISTRY[entry["adapter"]](ctx, **entry.get("args", {}))
         atom_parts.append(atoms)
-        if is_edge:
+        if "src" in typed.columns:
             edge_parts.append(typed.select("src", "tgt", "label"))
         else:
-            cols = ["id", "label"]
             opt = [c for c in ("chr", "start", "end") if c in typed.columns]
-            node_parts.append(typed.select(*cols, *opt))
-    nodes = None
-    if node_parts:
-        nodes = node_parts[0]
-        for p in node_parts[1:]:
-            nodes = nodes.unionByName(p, allowMissingColumns=True)
+            node_parts.append(typed.select("id", "label", *opt))
+    nodes = _union(node_parts, allow_missing=True)
+    if nodes is not None:
         nodes = dedup_nodes(nodes)
-    edges = None
-    if edge_parts:
-        edges = edge_parts[0]
-        for p in edge_parts[1:]:
-            edges = edges.unionByName(p, allowMissingColumns=True)
-    atoms = atom_parts[0]
-    for p in atom_parts[1:]:
-        atoms = atoms.unionByName(p)
-    return PipelineResult(nodes, edges, atoms)
+    return PipelineResult(nodes, _union(edge_parts, allow_missing=True),
+                          _union(atom_parts))
 
 
 def _written_manifest(spark, path: str, partition_by: list[str]) -> list[dict]:
@@ -506,9 +471,7 @@ def translate_reference_config(path: str | Path) -> list[dict]:
         kwargs = {k: v for k, v in args.items()
                   if k in _PASSTHROUGH_ARGS and v is not None}
         if name in ("uniprot_translates",) and args.get("type"):
-            kwargs["direction"] = args["type"].replace(" ", "_").replace(
-                "translation_of", "translation_of").replace(
-                "translates_to", "translates_to")
+            kwargs["direction"] = args["type"].replace(" ", "_")
             kwargs.pop("label", None)
         if name in ("parent_pathway_of", "child_pathway_of"):
             kwargs["label"] = name

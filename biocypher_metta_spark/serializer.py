@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
+from biocypher_metta_spark.functions.values import py_to_float
 from biocypher_metta_spark.schema import SchemaRegistry
 
 # ---------------------------------------------------------------------------
@@ -137,25 +138,24 @@ def _value_fragment(p: Prop) -> Column:
     raise ValueError(f"unknown prop kind {p.kind}")
 
 
-@pandas_udf(StringType())
-def _fmt_num_or_str(s: pd.Series) -> pd.Series:
+def _num_or_str(v):
     """FAVOR convert_freq_value + writer rendering in one step
     (favor_adapter.py:74-83 + metta_writer.py:162-174): '.' -> 0,
     numeric text -> clamped float repr, other text -> escaped string,
     ''/None -> skip (null)."""
-    from biocypher_metta_spark.functions.values import py_to_float
+    if v is None or v == "":
+        return None
+    if v == ".":
+        return "0"
+    try:
+        return str(py_to_float(v))
+    except (ValueError, TypeError):
+        return py_escape(v)
 
-    def one(v):
-        if v is None or v == "":
-            return None
-        if v == ".":
-            return "0"
-        try:
-            return str(py_to_float(v))
-        except (ValueError, TypeError):
-            return py_escape(v)
 
-    return s.map(one)
+@pandas_udf(StringType())
+def _fmt_num_or_str(s: pd.Series) -> pd.Series:
+    return s.map(_num_or_str)
 
 
 def num_or_str_fragment(col: Column) -> Column:
@@ -166,19 +166,7 @@ def num_or_str_fragment(col: Column) -> Column:
 def _fmt_num_or_str_arr(s: pd.Series) -> pd.Series:
     """Vectorized batch variant: render a whole array of num_or_str
     values in ONE Arrow crossing (FAVOR's ~80 annotation fields)."""
-    from biocypher_metta_spark.functions.values import py_to_float
-
-    def one_val(v):
-        if v is None or v == "":
-            return None
-        if v == ".":
-            return "0"
-        try:
-            return str(py_to_float(v))
-        except (ValueError, TypeError):
-            return py_escape(v)
-
-    return s.map(lambda arr: None if arr is None else [one_val(v) for v in arr])
+    return s.map(lambda arr: None if arr is None else [_num_or_str(v) for v in arr])
 
 
 def num_or_str_fragments(arr_col: Column) -> Column:

@@ -19,10 +19,6 @@ from pyspark.sql import functions as F
 
 GENE_KEYS = ["gene_id", "gene_type", "gene_name",
              "transcript_id", "transcript_type", "transcript_name", "hgnc_id"]
-TRANSCRIPT_KEYS = ["gene_id", "gene_type", "gene_name",
-                   "transcript_id", "transcript_type", "transcript_name"]
-EXON_KEYS = ["gene_id", "transcript_id", "transcript_type",
-             "transcript_name", "exon_number", "exon_id"]
 
 
 def attr(line_col, key: str):

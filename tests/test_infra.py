@@ -158,6 +158,19 @@ def test_connected_components(spark):
     assert m["d"] == m["e"] == "d"
 
 
+def test_canonical_id_map_long_chain(spark):
+    """A 30-node alias chain with its min id at one end needs 30 label-
+    propagation rounds: fewer must raise, not return split components."""
+    chain = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(29)],
+        "src string, dst string")
+    with pytest.raises(RuntimeError, match="did not reach a fixed point"):
+        canon.canonical_id_map(chain)
+    id_map = canon.canonical_id_map(chain, max_iter=30).collect()
+    assert len(id_map) == 30
+    assert {r.canonical_id for r in id_map} == {"n00"}
+
+
 def test_canonicalize_nodes(spark):
     alias = spark.createDataFrame(
         [("ENSG2", "HGNC:9"), ("HGNC:9", "ENSG2"), ("ENSG1", "HGNC:5")],
@@ -201,6 +214,22 @@ def test_partition_overwrite_resume(spark, tmp_path):
                           if r["chr"] == "chr2" else r for r in m2]}
     flagged = lineage.failed_partitions(exp, bad)
     assert [r["chr"] for r in flagged] == ["chr2"]
+
+
+def test_write_partitioned_leaves_session_conf(spark, tmp_path):
+    """Dynamic overwrite is a per-write option: the session's overwrite
+    mode is unchanged, so a later plain overwrite still replaces every
+    partition."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    df = spark.createDataFrame([("chr1", "a"), ("chr2", "b")],
+                               "chr string, id string")
+    lineage.write_partitioned(df, str(tmp_path / "dynamic"), ["chr"])
+    assert spark.conf.get(key) == before
+    path = str(tmp_path / "static")
+    df.write.mode("overwrite").partitionBy("chr").parquet(path)
+    df.filter("chr = 'chr1'").write.mode("overwrite").partitionBy("chr").parquet(path)
+    assert [r.chr for r in spark.read.parquet(path).collect()] == ["chr1"]
 
 
 def test_manifest_roundtrip(tmp_path, spark):

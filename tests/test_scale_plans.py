@@ -1,6 +1,6 @@
 """Physical-plan evidence for the scale story: AQE skew-join splitting on
 hub keys, broadcast joins on dimensions, partition pruning on the triple
-table, salted aggregation equivalence."""
+table, single-shuffle hub-entity aggregation."""
 
 from __future__ import annotations
 
@@ -78,9 +78,10 @@ def test_triple_table_partition_pruning(spark, tmp_path):
     assert q.count() == 500
 
 
-def test_salted_agg_equals_plain(spark):
-    """Salted two-stage aggregation (hub-entity pattern) must equal the
-    direct groupBy."""
+def test_hub_entity_agg_equals_plain(spark):
+    """Per-entity mention counts over a 90 % hub entity must equal the
+    direct groupBy and shuffle once: map-side partial aggregation already
+    folds the hub to one row per task."""
     from biocypher_metta_spark import linking
 
     linked = spark.range(50_000).select(
@@ -88,12 +89,15 @@ def test_salted_agg_equals_plain(spark):
             F.concat(F.lit("G"), F.col("id"))).alias("entity"),
         F.col("id").cast("string").alias("doc_id"),
         F.lit(1.0).alias("score"))
-    salted = {r.entity: (r.n_mentions, r.score_sum) for r in
-              linking.entity_mention_counts(linked, salt_buckets=16).collect()}
+    counts = linking.entity_mention_counts(linked)
+    # read before execution: AQE's final plan string repeats the initial one
+    plan = counts._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1 and "partial_count" in plan, plan
+    got = {r.entity: (r.n_mentions, r.score_sum) for r in counts.collect()}
     plain = {r.entity: (r.n, r.s) for r in
              linked.groupBy("entity").agg(F.count("*").alias("n"),
                                           F.sum("score").alias("s")).collect()}
-    assert salted == plain
+    assert got == plain
 
 
 def test_ann_bucket_layout_prunes_partitions(spark, tmp_path):
