@@ -6,14 +6,22 @@ rule generalizes this to salt-keyed canonicalization via connected
 components over the alias graph formed by the id maps (hgnc<->ensembl,
 entrez->ensembl, ensembl_protein->uniprot — SURVEY §2.4 J1-J4).
 
-Implementation: iterative label propagation with plain DataFrame joins
-(no GraphFrames dependency). Alias chains are short (id systems form
-star-shaped components around one canonical accession), so the loop
-converges in <= `max_iter` rounds; each round is one shuffle on the node
-key. Deterministic canonical pick = lexicographic min id in the
-component. Hub safety: membership is keyed by node id (unique), so the
-join keys are skew-free; the final groupBy aggregates componet sizes with
-map-side partial aggregation.
+Implementation: min-label propagation with plain DataFrame operators
+(no GraphFrames dependency). The starting label of a node is the min of
+itself and its neighbours: one groupBy over the symmetric edge list,
+which is also the node list, since every node is some edge's source.
+Each further round is one inner join (edge target = labelled node: each
+node gets its neighbours' labels) and one groupBy on the node id that
+takes the min over those labels and the node's own, flagged rows. Alias
+chains are short (id systems form star-shaped components around one
+canonical accession), so the loop converges in <= `max_iter` rounds.
+Deterministic canonical pick = lexicographic min id in the component.
+
+Hub skew: a hub id (one gene with thousands of aliases) is a hot key on
+both sides of a round. In the join, the hub's spokes all land on the
+edge side, and an inner join's skewed side is one AQE's skew handling
+can split. In the groupBy, all the spokes' labels meet at the hub's row,
+and map-side partial aggregation folds them before the shuffle.
 """
 
 from __future__ import annotations
@@ -28,10 +36,11 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                          max_iter: int = 10) -> DataFrame:
     """edges -> (id, component) where component = min id reachable.
 
-    Label propagation: every node starts labeled with itself; each round
-    adopts the min label among itself and its neighbors; stop when no
-    label changes (checked with a cheap agg). Raises when max_iter rounds
-    end before that: partial labels would split components silently.
+    Min-label propagation: every node starts with the min of itself and
+    its neighbours (one groupBy, which counts as round one); each round
+    adopts the min label among itself and its neighbours; stop when no
+    label changes. Raises when max_iter rounds end before that: partial
+    labels would split components silently.
     """
     sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
            .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -42,41 +51,37 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     # measured ~70s of a 190s doc-dup-clusters run when the edges come
     # from the LSH candidate-pair join.
     sym = sym.localCheckpoint(eager=True)
-    labels = (sym.select(F.col("a").alias("id"))
-              .union(sym.select(F.col("b").alias("id")))
-              .distinct()
-              .withColumn("component", F.col("id")))
-    converged = False
-    for _ in range(max_iter):
+    # every node is some edge's `a`, so this is also the node list
+    labels = (sym.groupBy("a")
+              .agg(F.least(F.col("a"), F.min("b")).alias("component"))
+              .withColumnRenamed("a", "id"))
+    for _ in range(max_iter - 1):
         neigh = (sym.join(labels, sym["b"] == labels["id"])
-                 .select(F.col("a").alias("id"),
-                         F.col("component").alias("nlabel")))
-        new_labels = (labels.join(neigh, "id", "left")
+                 .select(F.col("a").alias("id"), "component",
+                         F.lit(False).alias("own")))
+        # a boolean flag, not a null `old` column on the neighbour rows:
+        # an untyped null would make the union compare long ids as text
+        new_labels = (neigh.union(labels.withColumn("own", F.lit(True)))
                       .groupBy("id")
-                      .agg(F.least(F.min("component"), F.min("nlabel")).alias("newc"),
-                           F.first("component").alias("component")))
+                      .agg(F.min("component").alias("component"),
+                           F.min(F.when(F.col("own"), F.col("component")))
+                           .alias("old")))
         # ONE materialization per round: checkpoint first, then read the
-        # convergence flag and the next labels off the checkpointed rows
-        # (the previous shape computed new_labels twice per round).
+        # convergence flag and the next labels off the checkpointed rows.
         # _ckcut, not plain localCheckpoint: each round joins the previous
         # round's labels, so inherited size stats would square per round
         # and planning would stall past ~20 rounds (see ckpt.py)
         new_labels = _ckcut(new_labels)
         changed = new_labels.filter(
-            F.col("newc").isNotNull() & (F.col("newc") != F.col("component"))
-        ).limit(1).count()
-        labels = new_labels.select(
-            "id", F.coalesce("newc", "component").alias("component"))
+            F.col("component") != F.col("old")).limit(1).count()
+        labels = new_labels.select("id", "component")
         if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # a label needs one round per hop, plus one to see no change
-        raise RuntimeError(
-            f"connected_components did not reach a fixed point within "
-            f"{max_iter} rounds (a component's diameter must be below "
-            "max_iter); raise max_iter")
-    return labels
+            return labels
+    # a label needs one round per hop, plus one to see no change
+    raise RuntimeError(
+        f"connected_components did not reach a fixed point within "
+        f"{max_iter} rounds (a component's diameter must be below "
+        "max_iter); raise max_iter")
 
 
 def canonical_id_map(alias_edges: DataFrame, max_iter: int = 10) -> DataFrame:

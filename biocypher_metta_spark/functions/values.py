@@ -1,8 +1,9 @@
 """Scalar value coercions.
 
-py_to_float: exact twin of helpers.py:92-115 to_float — float() with
-magnitude clamped to 1e±307 (ArangoDB 64-bit safety) and ±inf mapped to
-1e307 / 1e-307 (reference maps -inf to *positive* 1e-307; quirk preserved).
+py_to_float: exact twin of helpers.py:92-115 to_float — float() with a
+base-10 exponent beyond ±307 rescaled to ±307 (ArangoDB 64-bit safety)
+and ±inf mapped to 1e307 / 1e-307 (reference maps -inf to *positive*
+1e-307; quirk preserved).
 """
 
 from __future__ import annotations
@@ -33,14 +34,17 @@ def py_to_float(s) -> float:
 
 
 def to_float_col(col: Column) -> Column:
-    """Column version: cast to double with the 1e±307 clamp. Stays JVM-side
-    (least/greatest) — the clamp only engages beyond double's practical
-    data range, so plain casts dominate the plan."""
+    """Column twin of py_to_float: cast to double, map ±inf like the
+    reference, and rescale a value whose base-10 exponent is beyond
+    ±307 by that many powers of ten. Stays JVM-side; only values beyond
+    double's practical data range take the rescale branches."""
     d = col.cast("double")
-    clamped = F.least(F.greatest(d, F.lit(-1e307)), F.lit(1e307))
+    exponent = F.floor(F.log10(F.abs(d)))  # null for 0: left as is
     # reference maps +inf -> 1e307 and -inf -> 1e-307 (helpers.py:100-104)
     return (
         F.when(d == F.lit(float("inf")), F.lit(1e307))
         .when(d == F.lit(float("-inf")), F.lit(1e-307))
-        .otherwise(clamped)
+        .when(exponent > 307, d / F.pow(F.lit(10.0), exponent - 307))
+        .when(exponent < -307, d * F.pow(F.lit(10.0), -exponent - 307))
+        .otherwise(d)
     )

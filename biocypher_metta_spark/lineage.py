@@ -34,11 +34,10 @@ def write_partitioned(df: DataFrame, path: str,
      .partitionBy(*partition_by).parquet(path))
 
 
-def partition_manifest(df: DataFrame, partition_by: list[str],
-                       content_cols: list[str] | None = None) -> list[dict]:
+def partition_manifest(df: DataFrame, partition_by: list[str]) -> list[dict]:
     """Per-partition lineage rows: key -> row count + order-insensitive
     content hash (xor of row xxhashes — distributed, no sort)."""
-    cols = content_cols or [c for c in df.columns if c not in partition_by]
+    cols = [c for c in df.columns if c not in partition_by]
     row_hash = F.xxhash64(*[F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
                             for c in cols])
     # BIT_XOR of row hashes is order-insensitive and associative -> a
@@ -50,16 +49,13 @@ def partition_manifest(df: DataFrame, partition_by: list[str],
     return [r.asDict() for r in agg.collect()]
 
 
-def write_manifest(manifest_rows: list[dict], path: str,
-                   run_id: str, extra: dict | None = None) -> None:
+def write_manifest(manifest_rows: list[dict], path: str, run_id: str) -> None:
     out = {
         "run_id": run_id,
         "written_at": time.time(),
         "partitions": sorted(manifest_rows,
                              key=lambda r: json.dumps(r, sort_keys=True, default=str)),
     }
-    if extra:
-        out.update(extra)
     p = Path(path)
     p.parent.mkdir(parents=True, exist_ok=True)
     p.write_text(json.dumps(out, indent=1, default=str))

@@ -34,6 +34,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from biocypher_metta_spark import lineage, sinks
 from biocypher_metta_spark.canonicalize import dedup_nodes
@@ -303,11 +304,12 @@ class PipelineResult:
     atoms: DataFrame
 
 
-def _union(parts: list[DataFrame], allow_missing: bool = False) -> DataFrame | None:
+def _union(parts: list[DataFrame]) -> DataFrame | None:
+    """By name; node parts differ in their optional chr/start/end."""
     if not parts:
         return None
     return functools.reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing), parts)
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
 
 def build(ctx: PipelineContext, config: list[dict]) -> PipelineResult:
@@ -325,29 +327,24 @@ def build(ctx: PipelineContext, config: list[dict]) -> PipelineResult:
         else:
             opt = [c for c in ("chr", "start", "end") if c in typed.columns]
             node_parts.append(typed.select("id", "label", *opt))
-    nodes = _union(node_parts, allow_missing=True)
+    nodes = _union(node_parts)
     if nodes is not None:
         nodes = dedup_nodes(nodes)
-    return PipelineResult(nodes, _union(edge_parts, allow_missing=True),
-                          _union(atom_parts))
+    return PipelineResult(nodes, _union(edge_parts), _union(atom_parts))
 
 
-def _written_manifest(spark, path: str, partition_by: list[str]) -> list[dict]:
-    """Fingerprint what actually LANDED, not the logical plan: verifies
-    the write itself and avoids re-deriving the full adapter union a
-    second time (the manifest scan is a cheap columnar read-back).
-    Partition columns are re-cast to string — read-back partition-value
-    inference would otherwise retype purely-numeric values (and corrupt
-    zero-padded ones) relative to the pre-write frame. An empty result
-    writes only _SUCCESS, where read.parquet cannot infer a schema —
-    that's an empty manifest, not an error."""
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
-        return []
-    for p in partition_by:
-        df = df.withColumn(p, F.col(p).cast("string"))
-    return lineage.partition_manifest(df, partition_by)
+def _written_manifest(df: DataFrame, path: str, partition_by: list[str]) -> list[dict]:
+    """Fingerprint what actually LANDED at `path` (where `df` was
+    written), not the logical plan: verifies the write itself and avoids
+    re-deriving the full adapter union a second time (the manifest scan
+    is a cheap columnar read-back). The read-back takes `df`'s data
+    columns and the partition columns as string, so partition-value
+    inference cannot retype values or strip zero-padded ones, and an
+    empty write (only _SUCCESS) reads as 0 rows."""
+    schema = StructType([f for f in df.schema.fields if f.name not in partition_by]
+                        + [StructField(p, StringType()) for p in partition_by])
+    return lineage.partition_manifest(
+        df.sparkSession.read.schema(schema).parquet(path), partition_by)
 
 
 def materialize(result: PipelineResult, out_dir: str, registry: SchemaRegistry,
@@ -362,12 +359,11 @@ def materialize(result: PipelineResult, out_dir: str, registry: SchemaRegistry,
             result.nodes.withColumn("chr_part", F.lit("none"))
         lineage.write_partitioned(ndf, str(out / "nodes"), ["label", "chr_part"])
         manifests["nodes"] = _written_manifest(
-            result.nodes.sparkSession, str(out / "nodes"), ["label", "chr_part"])
+            ndf, str(out / "nodes"), ["label", "chr_part"])
     if result.edges is not None:
-        lineage.write_partitioned(result.edges.withColumn("label_part", F.col("label")),
-                                  str(out / "edges"), ["label_part"])
-        manifests["edges"] = _written_manifest(
-            result.edges.sparkSession, str(out / "edges"), ["label_part"])
+        edf = result.edges.withColumn("label_part", F.col("label"))
+        lineage.write_partitioned(edf, str(out / "edges"), ["label_part"])
+        manifests["edges"] = _written_manifest(edf, str(out / "edges"), ["label_part"])
     sinks.write_metta_text(result.atoms, str(out / "metta"))
     (out / "type_defs.metta").parent.mkdir(parents=True, exist_ok=True)
     (out / "type_defs.metta").write_text(registry.type_defs_text())

@@ -10,7 +10,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from biocypher_metta_spark.functions.hgvs import variant_id_from_hgvs
-from biocypher_metta_spark.functions.values import py_to_float
+from biocypher_metta_spark.functions.values import py_to_float, to_float_col
 from biocypher_metta_spark.operators import multimodal as mm
 from tests.reference_shim import load_ref
 
@@ -33,6 +33,14 @@ def test_to_float_decimal_strings(d):
     h = _helpers()
     s = str(d)
     assert py_to_float(s) == h.to_float(s)
+
+
+@pytest.mark.parametrize("s", ["3e307", "1.5e308", "1e-310", "0", "0.5", "1e308",
+                               "-1.5e308", "-1e-310", "inf", "-inf"])
+def test_to_float_col_matches_py(spark, s):
+    df = spark.createDataFrame([(s,)], "v string")
+    got = df.select(to_float_col(F.col("v")).alias("f")).first().f
+    assert got == py_to_float(s)
 
 
 def test_variant_id_builders_parity():

@@ -3,6 +3,8 @@ lineage/resume, linking, sinks, dedup/similarity operators."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -158,9 +160,45 @@ def test_connected_components(spark):
     assert m["d"] == m["e"] == "d"
 
 
+def _union_find_components(edges: list[tuple]) -> dict:
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@pytest.mark.parametrize("kind", ["string", "long"])
+def test_connected_components_matches_union_find(spark, kind):
+    """Seeded random graphs (isolated pairs, chains, cycles, self-loops,
+    duplicate and reversed edges) plus a star whose hub has 5k spokes."""
+    rng = random.Random(20261017)
+    key = (lambda i: f"n{i:05d}") if kind == "string" else (lambda i: i)
+    graphs = [[(key(rng.randrange(n)), key(rng.randrange(n)))
+               for _ in range(m)] for n, m in ((40, 25), (300, 260), (400, 700))]
+    hub = key(2500)
+    graphs.append([(hub, key(i)) for i in range(5001) if i != 2500]
+                  + [(key(6000 + i), key(6100 + i)) for i in range(50)])
+    for edges in graphs:
+        df = spark.createDataFrame(edges, f"src {kind}, dst {kind}")
+        got = {r.id: r.component
+               for r in canon.connected_components(df, max_iter=30).collect()}
+        assert got == _union_find_components(edges)
+
+
 def test_canonical_id_map_long_chain(spark):
     """A 30-node alias chain with its min id at one end needs 30 label-
-    propagation rounds: fewer must raise, not return split components."""
+    propagation rounds (29 hops, the first folded into the starting
+    labels, plus one to see no change): fewer must raise, not return
+    split components."""
     chain = spark.createDataFrame(
         [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(29)],
         "src string, dst string")

@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from biocypher_metta_spark import pipeline
+from biocypher_metta_spark import lineage, pipeline
 from biocypher_metta_spark.schema import load_default_registry
 from biocypher_metta_spark.sources.documents import span_lines
 from biocypher_metta_spark.sources.gtf import GENE_KEYS, parse_gtf
@@ -170,3 +172,20 @@ def test_materialize_empty_result(spark, tmp_path):
                                 "args": {"chr": "chrNOPE"}}])
     m = pipeline.materialize(res, str(tmp_path / "kg"), load_default_registry())
     assert m["nodes"] == []
+
+
+def test_written_manifest_keeps_partition_values(spark, tmp_path):
+    """Zero-padded and null partition values come back as written; an
+    empty write is an empty manifest; a missing path is an error."""
+    df = spark.createDataFrame([("a", "007"), ("b", "007"), ("c", "16"), ("d", None)],
+                               "id string, part string")
+    path = str(tmp_path / "t")
+    lineage.write_partitioned(df, path, ["part"])
+    got = {r["part"]: r["n_rows"]
+           for r in pipeline._written_manifest(df, path, ["part"])}
+    assert got == {"007": 2, "16": 1, None: 1}
+    empty = str(tmp_path / "empty")
+    lineage.write_partitioned(df.limit(0), empty, ["part"])
+    assert pipeline._written_manifest(df, empty, ["part"]) == []
+    with pytest.raises(AnalysisException):
+        pipeline._written_manifest(df, str(tmp_path / "missing"), ["part"])
