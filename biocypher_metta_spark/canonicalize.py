@@ -12,8 +12,10 @@ itself and its neighbours: one groupBy over the symmetric edge list,
 which is also the node list, since every node is some edge's source.
 Each further round is one inner join (edge target = labelled node: each
 node gets its neighbours' labels) and one groupBy on the node id that
-takes the min over those labels and the node's own, flagged rows. Alias
-chains are short (id systems form star-shaped components around one
+takes the min over those labels and the node's own, flagged rows; the
+checkpoint that cuts the round's lineage also counts the changed labels
+(an observed metric), so no separate query reads the convergence flag.
+Alias chains are short (id systems form star-shaped components around one
 canonical accession), so the loop converges in <= `max_iter` rounds.
 Deterministic canonical pick = lexicographic min id in the component.
 
@@ -26,7 +28,7 @@ and map-side partial aggregation folds them before the shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from biocypher_metta_spark.ckpt import local_checkpoint_cut as _ckcut
@@ -42,8 +44,10 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     label changes. Raises when max_iter rounds end before that: partial
     labels would split components silently.
     """
-    sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+    # both directions from one read of the edges (a union reads them twice)
+    both = F.explode(F.array(F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+                             F.struct(F.col(dst).alias("a"), F.col(src).alias("b"))))
+    sym = (edges.select(both.alias("e")).select("e.a", "e.b")
            .filter(F.col("a") != F.col("b"))
            .distinct())
     # checkpoint BEFORE deriving labels: labels' first materialization
@@ -66,16 +70,16 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                       .agg(F.min("component").alias("component"),
                            F.min(F.when(F.col("own"), F.col("component")))
                            .alias("old")))
-        # ONE materialization per round: checkpoint first, then read the
-        # convergence flag and the next labels off the checkpointed rows.
-        # _ckcut, not plain localCheckpoint: each round joins the previous
-        # round's labels, so inherited size stats would square per round
-        # and planning would stall past ~20 rounds (see ckpt.py)
-        new_labels = _ckcut(new_labels)
-        changed = new_labels.filter(
-            F.col("component") != F.col("old")).limit(1).count()
+        # ONE query per round: the checkpoint also counts the changed
+        # labels, as an observed metric. _ckcut, not plain localCheckpoint:
+        # each round joins the previous round's labels, so inherited size
+        # stats would square per round and planning would stall past ~20
+        # rounds (see ckpt.py)
+        changed = Observation()
+        new_labels = _ckcut(new_labels.observe(changed, F.count(
+            F.when(F.col("component") != F.col("old"), 1)).alias("n")))
         labels = new_labels.select("id", "component")
-        if changed == 0:
+        if changed.get["n"] == 0:
             return labels
     # a label needs one round per hop, plus one to see no change
     raise RuntimeError(

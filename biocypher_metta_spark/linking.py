@@ -115,10 +115,15 @@ def build_mention_join(spark: SparkSession, dictionary: dict[str, str],
     (doc_id, mention, entity, score >= min_score).
     """
     exact, folded = _surface_maps(dictionary)
-    edim = spark.createDataFrame(list(exact.items()),
-                                 "surface string, entity_e string")
-    fdim = spark.createDataFrame(list(folded.items()),
-                                 "surface_f string, entity_f string")
+    # pandas in, so Arrow ships the maps to the JVM: a list of tuples
+    # becomes a pickled Python RDD that Python workers decode again every
+    # time a link plan reads it
+    edim = spark.createDataFrame(
+        pd.DataFrame(list(exact.items()), columns=["surface", "entity_e"]),
+        "surface string, entity_e string")
+    fdim = spark.createDataFrame(
+        pd.DataFrame(list(folded.items()), columns=["surface_f", "entity_f"]),
+        "surface_f string, entity_f string")
 
     gram_exprs = []
     for n in range(1, max_ngram + 1):

@@ -332,6 +332,20 @@ def test_mention_join_path_parity(spark):
     assert any(m == "p21 activated kinase 5" for _, m, _, _ in join_rows)
 
 
+def test_mention_join_dictionary_is_jvm_side(spark):
+    """The dictionary frames reach the plan as JVM-side relations, not as
+    pickled Python RDDs that Python workers decode on every link query:
+    the only Python-built RDD in the plan is the documents' own. An empty
+    dictionary links nothing."""
+    docs = spark.createDataFrame([("d1", "PAK5 and pak5")],
+                                 "doc_id string, value string")
+    link = linking.build_mention_join(spark, {"PAK5": "ENSG1"})
+    plan = link(docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("LogicalRDD") == 1
+    assert {r.mention for r in link(docs).collect()} == {"PAK5", "pak5"}
+    assert linking.build_mention_join(spark, {})(docs).collect() == []
+
+
 # --------------------------------------------------------------------------
 # sinks
 # --------------------------------------------------------------------------
